@@ -13,13 +13,24 @@ tables with an explicit `_snapshots` lineage log, mirroring:
 - the compaction commit is a REPLACE snapshot — the watermark the
   trigger evaluator stops at (AwsTableManagementMetricsEvaluator.java:114)
 
+The lineage log is driver-written metadata, as Iceberg's is: the
+catalog commits metadata from the driver with no Spark job
+(AwsTableManagementMetricsEvaluator.java:64-85), and only the rewrite
+runs as a job.  Each commit writes one row with pyarrow to a
+dot-prefixed temp file in `<table>/_snapshots/` and publishes it
+atomically by renaming it to its own `part-<snapshot_id>-<uuid>.parquet`;
+readers (pyarrow and Spark alike) skip dot-prefixed files, so an
+in-flight append is never seen half-written and concurrent appenders
+never share a file.
+
 Scale notes: group planning is a window cumsum over the *file
 inventory* (metadata, rows ~ file count — tiny even at 100 TB of
-data); the rewrite itself is one `spark.read(group).repartition(n)`
-job per group, where n = ceil(group_bytes / target_file_bytes), so no
-single task ever sees more than one output file's worth of data.
-Nothing is collected to the driver except the group list (bounded by
-file count / cap).
+data), listed once per compaction; row counts come from the parquet
+footers of that listing, not from scans.  The rewrite itself is one
+`spark.read(group).repartition(n)` job per group, where n =
+ceil(group_bytes / target_file_bytes), so no single task ever sees
+more than one output file's worth of data.  Nothing is collected to
+the driver except the group list (bounded by file count / cap).
 """
 
 from __future__ import annotations
@@ -29,6 +40,8 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -141,8 +154,28 @@ def _list_data_files(table_dir: str) -> list[str]:
     )
 
 
+#: The `_snapshots` row layout; Spark reads it as `table_name string,
+#: snapshot_id bigint, ts timestamp, operation string` (a UTC-adjusted
+#: micros timestamp is Spark's session-zone `timestamp`).
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("table_name", pa.string()),
+        ("snapshot_id", pa.int64()),
+        ("ts", pa.timestamp("us", tz="UTC")),
+        ("operation", pa.string()),
+    ]
+)
+
+
 def append_snapshot(spark: SparkSession, table_dir: str, operation: str, snapshot_id: int | None = None) -> int:
     """Append one row to the table's `_snapshots` lineage log (B4).
+
+    The lineage is driver-written metadata, as Iceberg's is: the row is
+    written with pyarrow, no Spark job (`spark` is unused; it keeps the
+    signature of the other table operations).  It goes to a dot-prefixed
+    temp file and is published atomically by renaming it to a unique
+    `part-<snapshot_id>-<uuid>.parquet`; readers skip dot-prefixed
+    files, so they see the whole row or nothing.
 
     The REPLACE row written by compaction is exactly what
     `pending_since_replace` (A7) later treats as the optimize
@@ -150,18 +183,39 @@ def append_snapshot(spark: SparkSession, table_dir: str, operation: str, snapsho
     """
     if snapshot_id is None:
         snapshot_id = time.time_ns()
-    row = [(os.path.basename(table_dir), snapshot_id, operation)]
-    df = (
-        spark.createDataFrame(row, "table_name string, snapshot_id long, operation string")
-        .withColumn("ts", F.timestamp_micros(F.lit(snapshot_id // 1000)))
-        .select("table_name", "snapshot_id", "ts", "operation")
+    row = pa.table(
+        {
+            "table_name": [os.path.basename(table_dir)],
+            "snapshot_id": [snapshot_id],
+            "ts": [snapshot_id // 1000],
+            "operation": [operation],
+        },
+        schema=LINEAGE_SCHEMA,
     )
-    df.coalesce(1).write.mode("append").parquet(os.path.join(table_dir, "_snapshots"))
+    snap_dir = os.path.join(table_dir, "_snapshots")
+    os.makedirs(snap_dir, exist_ok=True)
+    name = f"{snapshot_id}-{uuid.uuid4().hex}"
+    tmp = os.path.join(snap_dir, f".{name}.inflight")
+    try:
+        pq.write_table(row, tmp)
+        os.rename(tmp, os.path.join(snap_dir, f"part-{name}.parquet"))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
     return snapshot_id
 
 
 def read_snapshots(spark: SparkSession, table_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(table_dir, "_snapshots"))
+    """The `_snapshots` lineage log as a DataFrame.
+
+    Read on the driver with pyarrow (the log is metadata, one row per
+    commit) against the fixed LINEAGE_SCHEMA — no file-listing job, no
+    schema inference — and handed to Spark.  Readers skip dot-prefixed
+    files, so in-flight appends are invisible.
+    """
+    lineage = pq.read_table(os.path.join(table_dir, "_snapshots"), schema=LINEAGE_SCHEMA)
+    return spark.createDataFrame(lineage)
 
 
 def write_table(spark: SparkSession, df: DataFrame, table_dir: str, n_files: int) -> None:
@@ -170,11 +224,15 @@ def write_table(spark: SparkSession, df: DataFrame, table_dir: str, n_files: int
     append_snapshot(spark, table_dir, "append")
 
 
-def file_inventory(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The `<table>.files` metadata analog, from the real filesystem."""
-    paths = _list_data_files(table_dir)
+def file_inventory(spark: SparkSession, table_dir: str, paths: list[str]) -> DataFrame:
+    """The `<table>.files` metadata analog, from a listing of the
+    table's data files (`_list_data_files`)."""
     rows = [(os.path.basename(table_dir), p, os.path.getsize(p)) for p in paths]
     return spark.createDataFrame(rows, "table_name string, file_path string, file_size_bytes long")
+
+
+def _footer_rows(paths: list[str]) -> int:
+    return sum(pq.read_metadata(p).num_rows for p in paths)
 
 
 def compact_table(
@@ -194,8 +252,9 @@ def compact_table(
     files, and commits one REPLACE snapshot per group (partial
     progress) or one for the whole run.
     """
-    inv = file_inventory(spark, table_dir)
-    planned = plan_binpack_groups(inv, max_group_size_bytes)
+    paths = _list_data_files(table_dir)
+    inv = file_inventory(spark, table_dir, paths)
+    planned = plan_binpack_groups(inv, max_group_size_bytes, n_files=len(paths))
     groups = (
         planned.groupBy("group_id")
         .agg(
@@ -205,8 +264,8 @@ def compact_table(
         .orderBy("group_id")
         .collect()  # bounded: one row per file group (metadata-size)
     )
-    files_before = sum(len(g["paths"]) for g in groups)
-    rows_before = spark.read.parquet(os.path.join(table_dir, "data")).count()
+    files_before = len(paths)
+    rows_before = _footer_rows(paths)
 
     replace_ids: list[int] = []
     data_dir = os.path.join(table_dir, "data")
@@ -238,8 +297,9 @@ def compact_table(
     if not partial_progress:
         replace_ids.append(append_snapshot(spark, table_dir, "replace"))
 
-    files_after = len(_list_data_files(table_dir))
-    rows_after = spark.read.parquet(os.path.join(table_dir, "data")).count()
+    paths_after = _list_data_files(table_dir)
+    files_after = len(paths_after)
+    rows_after = _footer_rows(paths_after)
     return CompactionResult(
         table_dir=table_dir,
         n_groups=len(groups),

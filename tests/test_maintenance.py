@@ -4,6 +4,9 @@ event->decision->compaction path (SS3.1) against real parquet dirs."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -107,6 +110,98 @@ def test_end_to_end_evaluate_and_optimize(spark, small_table):
     # freshly compacted -> no re-trigger within thresholds
     ex2 = jobs.evaluate_and_maybe_optimize(spark, small_table, {})
     assert ex2 is None
+
+
+# The lineage layout the log had when Spark wrote it (a one-row
+# `coalesce(1).write.parquet` of this select): readers must keep seeing
+# exactly these columns and types.
+SPARK_LINEAGE_DTYPES = [
+    ("table_name", "string"),
+    ("snapshot_id", "bigint"),
+    ("ts", "timestamp"),
+    ("operation", "string"),
+]
+
+
+def test_lineage_format_matches_spark_layout(spark, tmp_path):
+    """The driver-written lineage reads back identically through
+    `read_snapshots` and a plain Spark parquet scan: same columns and
+    Spark types as a Spark-written row, in-flight (dot-prefixed) files
+    invisible to both, and the same trigger decision as the end-to-end
+    path (initial write + COMMIT_THRESHOLD appends fires on count)."""
+    from iceberg_aws_event_based_table_management_spark.operators import trigger
+
+    sid = 1_700_000_000_123_456_789
+    ref_dir = str(tmp_path / "spark_written")
+    (
+        spark.createDataFrame([("t", sid, "append")], "table_name string, snapshot_id long, operation string")
+        .withColumn("ts", F.timestamp_micros(F.lit(sid // 1000)))
+        .select("table_name", "snapshot_id", "ts", "operation")
+        .coalesce(1)
+        .write.parquet(ref_dir)
+    )
+    ref = spark.read.parquet(ref_dir)
+    assert ref.dtypes == SPARK_LINEAGE_DTYPES
+    # values, not just types: the same row, driver-written, reads back equal
+    one_dir = str(tmp_path / "one" / "t")
+    maintenance.append_snapshot(spark, one_dir, "append", sid)
+    assert maintenance.read_snapshots(spark, one_dir).collect() == ref.collect()
+
+    table_dir = str(tmp_path / "t")
+    maintenance.write_table(spark, spark.range(10), table_dir, n_files=1)
+    ids = [maintenance.append_snapshot(spark, table_dir, "append") for _ in range(config.COMMIT_THRESHOLD)]
+    snap_dir = os.path.join(table_dir, "_snapshots")
+    with open(os.path.join(snap_dir, ".part-0-inflight.parquet"), "wb") as fh:
+        fh.write(b"PAR1 torn write")
+
+    via_driver = maintenance.read_snapshots(spark, table_dir)
+    via_spark = spark.read.parquet(snap_dir)
+    for df in (via_driver, via_spark):
+        assert df.dtypes == SPARK_LINEAGE_DTYPES
+        assert df.count() == config.COMMIT_THRESHOLD + 1
+    assert sorted(via_driver.collect()) == sorted(via_spark.collect())
+
+    now = time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(ids[-1] / 1e9 + 2))
+    decisions = [
+        trigger.decide_optimize(df, now=now, replace_op="replace").collect()
+        for df in (via_driver, via_spark)
+    ]
+    assert decisions[0] == decisions[1]
+    (d,) = decisions[0]
+    assert d["n_commits_since_replace"] == config.COMMIT_THRESHOLD + 1
+    assert d["commit_trigger"] and not d["time_trigger"] and d["should_optimize"]
+
+
+def test_concurrent_lineage_appends(spark, tmp_path):
+    """Two writers appending to one table's lineage at once: every row
+    lands, nothing raises, and no in-flight temp file is left behind."""
+    table_dir = str(tmp_path / "t")
+    maintenance.write_table(spark, spark.range(10), table_dir, n_files=1)
+    errors: list[Exception] = []
+
+    def writer():
+        try:
+            for _ in range(20):
+                maintenance.append_snapshot(spark, table_dir, "append")
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert maintenance.read_snapshots(spark, table_dir).count() == 41
+    snap_dir = os.path.join(table_dir, "_snapshots")
+    assert spark.read.parquet(snap_dir).count() == 41
+    assert not [f for f in os.listdir(snap_dir) if f.startswith(".")]
 
 
 def test_load_executor_unknown_impl_raises(spark):

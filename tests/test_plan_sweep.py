@@ -136,12 +136,16 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_no_cartesian_products(spark, sf_dir, qmap):
+@pytest.fixture(scope="module")
+def executed_plans(spark, sf_dir, qmap):
+    """Every swept query's executed plan under the default footer gates,
+    built once and checked by each default-gate rule below."""
+    return {name: _executed(fn(spark, sf_dir)) for name, fn in qmap.items() if name not in SKIP}
+
+
+def test_no_cartesian_products(executed_plans):
     bad = {}
-    for name, fn in qmap.items():
-        if name in SKIP:
-            continue
-        plan = _executed(fn(spark, sf_dir))
+    for name, plan in executed_plans.items():
         if "CartesianProduct" in plan:
             bad[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in NESTED_LOOP_OK:
@@ -149,13 +153,11 @@ def test_no_cartesian_products(spark, sf_dir, qmap):
     assert not bad, f"cartesian-family joins leaked into: {bad}"
 
 
-def test_no_row_at_a_time_python(spark, sf_dir, qmap):
+def test_no_row_at_a_time_python(executed_plans):
     bad = [
         name
-        for name, fn in qmap.items()
-        if name not in SKIP
-        and name not in ROW_PYTHON_OK
-        and "BatchEvalPython" in _executed(fn(spark, sf_dir))
+        for name, plan in executed_plans.items()
+        if name not in ROW_PYTHON_OK and "BatchEvalPython" in plan
     ]
     assert not bad, f"row-at-a-time Python UDF in the hot path of: {bad}"
 
@@ -282,12 +284,11 @@ def test_no_corpus_broadcast_above_gate(spark, sf_dir, qmap, monkeypatch):
     )
 
 
-def test_no_unbounded_global_sorts(spark, sf_dir, qmap):
+def test_no_unbounded_global_sorts(executed_plans):
     bad = []
-    for name, fn in qmap.items():
-        if name in SKIP or name in GLOBAL_SORT_OK:
+    for name, plan in executed_plans.items():
+        if name in GLOBAL_SORT_OK:
             continue
-        plan = _executed(fn(spark, sf_dir))
         for line in plan.splitlines():
             s = line.strip().lstrip("+-*: ")
             # global sort = Sort over a rangepartitioned exchange; local
@@ -411,7 +412,7 @@ def _unpartitioned_windows(plan: str) -> list[str]:
     return out
 
 
-def test_no_unpartitioned_windows_over_data(spark, sf_dir, qmap):
+def test_no_unpartitioned_windows_over_data(executed_plans):
     """The r13-verdict incident class: a window with no PARTITION BY
     over a data-proportional relation plans as Exchange
     SinglePartition -> Sort -> Window — one task sorts (and holds)
@@ -423,10 +424,10 @@ def test_no_unpartitioned_windows_over_data(spark, sf_dir, qmap):
     unpartitioned window orders on the `_pid` sentinel over a bounded
     count frame) or carry a reviewed bounded-input allowlist entry."""
     bad = {}
-    for name, fn in qmap.items():
-        if name in SKIP or name in UNPART_WINDOW_OK:
+    for name, plan in executed_plans.items():
+        if name in UNPART_WINDOW_OK:
             continue
-        hits = _unpartitioned_windows(_executed(fn(spark, sf_dir)))
+        hits = _unpartitioned_windows(plan)
         if hits:
             bad[name] = hits[0]
     assert not bad, f"unpartitioned window over unreviewed input: {bad}"
